@@ -2048,7 +2048,12 @@ def _module_pkg_imports(mod_name: str) -> tuple[str, ...]:
     package module's ``vars()`` accumulates submodule bindings as a
     side effect of any import anywhere in the process, so the same key
     fingerprinted differently in different processes). The repo uses
-    absolute imports only."""
+    absolute imports only.
+
+    Fails closed: a module whose source cannot be found or parsed yields
+    the single marker ``unparseable:<mod>`` — its imports are unknown,
+    so the closure records that instead of silently shrinking (the same
+    rule as ``_module_file_hash``'s ``unreadable:`` marker)."""
     import ast
     import importlib.util
 
@@ -2057,7 +2062,7 @@ def _module_pkg_imports(mod_name: str) -> tuple[str, ...]:
         with open(spec.origin) as fh:
             tree = ast.parse(fh.read())
     except Exception:
-        return ()
+        return (f"unparseable:{mod_name}",)
     found: set[str] = set()
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
@@ -2104,7 +2109,8 @@ def _closure_modules(key: str) -> tuple[str, ...] | None:
         for nm in _module_pkg_imports(m):
             if nm not in mods:
                 mods.add(nm)
-                frontier.append(nm)
+                if nm.startswith(_PKG_NAME):  # not an unparseable: marker
+                    frontier.append(nm)
     return tuple(sorted(mods))
 
 

@@ -85,6 +85,83 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _local_fs_classes() -> str | None:
+    """Compiled classes of ``InJvmLocalFileSystem.java`` (next to this
+    module): Hadoop's local file system with the per-file ``chmod`` and
+    ``readlink`` calls answered inside the JVM. Without Hadoop's native
+    library, stock ``RawLocalFileSystem`` forks one process per created
+    file, made directory and FileContext rename, which dominated a
+    stateful micro-batch's checkpoint commit.
+
+    Compiled once with the JDK's ``javac`` into
+    ``~/.cache/flink_streaming_2_10_spark/``, keyed by the source hash
+    and the Hadoop jar it was compiled against. None (keep Hadoop's
+    stock local FS) without a JDK, a Hadoop jar or a writable cache."""
+    import hashlib
+    import shutil
+    import subprocess
+    import tempfile
+
+    from pyspark.find_spark_home import _find_spark_home
+
+    src = os.path.join(os.path.dirname(__file__), "InJvmLocalFileSystem.java")
+    jars = os.path.join(_find_spark_home(), "jars")
+    try:
+        hadoop = min(j for j in os.listdir(jars) if j.startswith("hadoop-client-api-"))
+        with open(src, "rb") as fh:
+            digest = hashlib.sha256(fh.read()).hexdigest()[:16]
+    except (OSError, ValueError):
+        return None
+    cache = os.path.join(os.path.expanduser("~"), ".cache", "flink_streaming_2_10_spark")
+    out = os.path.join(cache, f"localfs-{digest}-{hadoop.removesuffix('.jar')}")
+    if os.path.isdir(out):
+        return out
+    javac = shutil.which("javac")
+    if javac is None:
+        return None
+    try:
+        os.makedirs(cache, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=".localfs-", dir=cache)
+    except OSError:
+        return None
+    try:
+        # Spark 4 needs Java 17, so --release 17 loads in any JVM that runs it.
+        subprocess.run(
+            [javac, "-nowarn", "--release", "17", "-cp", os.path.join(jars, "*"),
+             "-d", tmp, src],
+            check=True, capture_output=True, timeout=300,
+        )
+        # atomic publish; a concurrent session may have published first
+        os.replace(tmp, out)
+    except (OSError, subprocess.SubprocessError):
+        pass
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out if os.path.isdir(out) else None
+
+
+def _local_fs_conf() -> dict[str, str]:
+    """Static conf that puts the in-JVM local FS on the driver classpath
+    and binds it to ``file:`` for both Hadoop APIs. In a JVM this process
+    already launched, only if the classes are on its classpath."""
+    from pyspark import SparkContext
+
+    classes = _local_fs_classes()
+    if classes is None:
+        return {}
+    fs_class = "flink_streaming_2_10_spark.localfs.InJvmLocalFileSystem"
+    if SparkContext._jvm is not None:
+        try:
+            SparkContext._jvm.java.lang.Class.forName(fs_class)
+        except Exception:
+            return {}
+    return {
+        "spark.driver.extraClassPath": classes,
+        "spark.hadoop.fs.file.impl": fs_class,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": fs_class + "$Fs",
+    }
+
+
 def get_spark(
     app_name: str = "flink-streaming-2-10-spark",
     cpus: int | str | None = None,
@@ -150,6 +227,6 @@ def get_spark(
             if jar and jar not in merged:
                 merged.append(jar)
         builder = builder.config("spark.jars", ",".join(merged))
-    for key, value in RUNTIME_CONF.items():
+    for key, value in {**_local_fs_conf(), **RUNTIME_CONF}.items():
         builder = builder.config(key, value)
     return configure(builder.getOrCreate())

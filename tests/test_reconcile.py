@@ -201,11 +201,11 @@ def test_baseline_rendered_oracles_worktree():
     the reconcile gate) and cleans the worktree up."""
     import subprocess
 
-    from tools.reconcile_fingerprints import _baseline_rendered_oracles
+    from tools.reconcile_fingerprints import ROOT, _baseline_rendered_oracles
 
     head = subprocess.run(
         ["git", "rev-parse", "HEAD"],
-        capture_output=True, text=True, check=True, cwd="/root/repo",
+        capture_output=True, text=True, check=True, cwd=ROOT,
     ).stdout.strip()
     rendered = _baseline_rendered_oracles(head)
     assert rendered is not None and len(rendered) >= 130
@@ -215,7 +215,7 @@ def test_baseline_rendered_oracles_worktree():
     assert _baseline_rendered_oracles("0" * 40) is None
     leftover = subprocess.run(
         ["git", "worktree", "list"],
-        capture_output=True, text=True, check=True, cwd="/root/repo",
+        capture_output=True, text=True, check=True, cwd=ROOT,
     ).stdout
     assert "fp_base_" not in leftover
 

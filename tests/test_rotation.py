@@ -157,3 +157,30 @@ def test_closure_includes_function_body_imports_and_is_deterministic():
     assert res.stdout.strip() == em._query_fingerprint(
         "curated_corpus_neardup"
     )
+
+
+def test_unparseable_module_fails_closed(monkeypatch):
+    """A closure module whose source cannot be found or parsed must leave
+    an ``unparseable:<mod>`` marker in the closure (and so change the
+    fingerprint) instead of silently contributing no imports."""
+    missing = "flink_streaming_2_10_spark.no_such_module"
+    assert em._module_pkg_imports(missing) == (f"unparseable:{missing}",)
+
+    key = "curated_corpus_neardup"
+    before = em._query_fingerprint(key)
+    victim = "flink_streaming_2_10_spark.pipeline.shard"
+    assert victim in em._closure_modules(key)
+    real = em._module_pkg_imports
+
+    def parse_fails_for_victim(mod):
+        return (f"unparseable:{mod}",) if mod == victim else real(mod)
+
+    monkeypatch.setattr(em, "_module_pkg_imports", parse_fails_for_victim)
+    em._closure_modules.cache_clear()
+    em._query_fingerprint.cache_clear()
+    try:
+        assert f"unparseable:{victim}" in em._closure_modules(key)
+        assert em._query_fingerprint(key) != before
+    finally:
+        em._closure_modules.cache_clear()
+        em._query_fingerprint.cache_clear()

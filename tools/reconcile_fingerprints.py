@@ -63,8 +63,12 @@ from __future__ import annotations
 
 import ast
 import json
+import os
 import subprocess
 import sys
+
+#: The checkout this tool belongs to (tools/..), whatever the cwd.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _def_map(tree: ast.Module, source: str) -> dict[str, str]:
@@ -199,7 +203,7 @@ def _git_show(commit: str, path: str) -> str | None:
     try:
         return subprocess.run(
             ["git", "show", f"{commit}:{path}"],
-            capture_output=True, text=True, check=True, cwd="/root/repo",
+            capture_output=True, text=True, check=True, cwd=ROOT,
         ).stdout
     except subprocess.CalledProcessError:
         return None
@@ -216,7 +220,7 @@ def _baseline_rendered_oracles(baseline: str) -> dict[str, str] | None:
     try:
         subprocess.run(
             ["git", "worktree", "add", "--detach", tmp, baseline],
-            capture_output=True, text=True, check=True, cwd="/root/repo",
+            capture_output=True, text=True, check=True, cwd=ROOT,
         )
         proc = subprocess.run(
             [
@@ -236,7 +240,7 @@ def _baseline_rendered_oracles(baseline: str) -> dict[str, str] | None:
     finally:
         subprocess.run(
             ["git", "worktree", "remove", "--force", tmp],
-            capture_output=True, text=True, cwd="/root/repo",
+            capture_output=True, text=True, cwd=ROOT,
         )
 
 
@@ -248,12 +252,12 @@ def main() -> int:
         return 2
     baseline = args[0]
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import importlib
 
     import __spark_entry__ as entry
 
-    here = "/root/repo"
+    here = ROOT
     last_seen = dict(entry._evidence_last_seen(here))
     stored_list = entry._stored_fingerprints(here)
     stored = {k: v for k, v in stored_list}
@@ -265,7 +269,7 @@ def main() -> int:
         if mod_name in delta_cache:
             return delta_cache[mod_name]
         mod = importlib.import_module(mod_name)
-        rel = mod.__file__.replace("/root/repo/", "")
+        rel = os.path.relpath(mod.__file__, ROOT)
         new_src = open(mod.__file__).read()
         old_src = _git_show(baseline, rel)
         if old_src is None:
@@ -372,11 +376,16 @@ def main() -> int:
             )
             continue
         # the transitive module closure _query_fingerprint uses —
-        # delegate to the entry's own walk (r19: includes function-body
-        # imports via co_names, which the old vars()-only replica missed
-        # — shard.py reaches pipeline.dedup/components only that way, so
-        # this tool cleared curated_corpus_neardup after a dedup edit)
+        # delegate to the entry's own walk (r19: an AST walk over each
+        # module's import statements, function bodies included, which
+        # the old vars()-only replica missed — shard.py reaches
+        # pipeline.dedup/components only that way, so this tool cleared
+        # curated_corpus_neardup after a dedup edit)
         modules = list(entry._closure_modules(key) or sorted(mods))
+        unknown = [m for m in modules if m.startswith("unparseable:")]
+        if unknown:
+            kept.append((key, f"{unknown[0]}: closure incomplete"))
+            continue
         used = _used_names(entry, key, modules, extra_seed=oracle_names)
         ok = True
         why = ""
