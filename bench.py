@@ -41,13 +41,54 @@ import sys
 import time
 
 
+def run_query(spark, name: str, fn, sf_dir: str) -> float:
+    """Run one registry query to the noop sink; returns wall seconds.
+
+    Every job the query launches — plan-time collects included —
+    carries job group ``name``, so the status tracker (or an event log)
+    can attribute it. The group is cleared afterwards, and operator-
+    internal persists (postings, signatures, bucketed vectors) are
+    released even on failure, so a query's time never depends on an
+    earlier query having materialized — or accumulated — cached blocks.
+    """
+    from flink_streaming_2_10_spark.pipeline.caching import release_cached
+
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        t0 = time.time()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return time.time() - t0
+    finally:
+        sc.setJobGroup(None, None)
+        release_cached()
+
+
+def sample_queries(
+    spark, queries: dict, sf_dir: str, n_iter: int, warmup: int
+) -> dict[str, list[float]]:
+    """``warmup`` untimed passes, then ``n_iter`` timed passes over
+    ``queries``; a failing query is reported on stderr and left
+    unsampled for that pass."""
+    samples: dict[str, list[float]] = {name: [] for name in queries}
+    for it in range(warmup + n_iter):
+        for name, fn in queries.items():
+            try:
+                took = run_query(spark, name, fn, sf_dir)
+            except Exception as exc:  # noqa: BLE001
+                print(f"bench error in {name}: {exc}", file=sys.stderr)
+                continue
+            if it >= warmup:
+                samples[name].append(took)
+    return samples
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_iter = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_N", "3")))
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
     import __spark_entry__ as entrymod
-    from flink_streaming_2_10_spark.pipeline.caching import release_cached
     from flink_streaming_2_10_spark.session import get_spark
 
     spark = get_spark("bench")
@@ -82,23 +123,7 @@ def main() -> None:
     calib = round(min(_calib_once() for _ in range(3)), 3)
 
     warmup = max(0, int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1")))
-    samples: dict[str, list[float]] = {name: [] for name in queries}
-    for it in range(warmup + n_iter):
-        timed = it >= warmup
-        for name, fn in queries.items():
-            t0 = time.time()
-            try:
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                if timed:
-                    samples[name].append(time.time() - t0)
-            except Exception as exc:  # noqa: BLE001
-                print(f"bench error in {name}: {exc}", file=sys.stderr)
-            finally:
-                # Operators register internal persists (postings,
-                # signatures, bucketed vectors); release between queries
-                # so iterations don't reuse — or accumulate — cached
-                # blocks across runs.
-                release_cached()
+    samples = sample_queries(spark, queries, sf_dir, n_iter, warmup)
 
     # Same probe at session END: the JVM is JIT-mature here, which the
     # round-10 postmortem showed is the only reproducible maturity point

@@ -41,8 +41,8 @@ caching it at 100 TB means spilling the whole corpus to executor disk.
 the output is identical either way (the sketch's point is that BOTH
 passes stay shuffle-light, not that the scan count is one).
 
-When to use it (measured — SCALE_r09.md vocabulary sweep,
-tools/scale_probe_hh.py): at vocabularies the JVM agg hash map holds
+When to use it (measured — SCALE_r09.md vocabulary sweep; probe in
+git history at 009097d): at vocabularies the JVM agg hash map holds
 comfortably (≤ millions of entries), a plain exact
 ``groupBy(token).count()`` + threshold filter is ~3× FASTER — the
 sketch pays the Arrow transfer of the whole token stream into Python

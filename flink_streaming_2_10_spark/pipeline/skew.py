@@ -13,8 +13,8 @@ The result is salt-invariant for any commutative-associative aggregate
 aggregate — the operator's whole contract is "same answer, bounded
 reducer".
 
-When to use at 100 TB — MEASURED, not asserted (SCALE_r10.md,
-tools/scale_probe_skew.py): at 20M rows with one key holding 50%,
+When to use at 100 TB — MEASURED, not asserted (SCALE_r10.md; probe
+in git history at 009097d): at 20M rows with one key holding 50%,
 salted runs 1.4–1.9× SLOWER than the plain aggregate at both 1e3 and
 5e6 tail keys, because map-side partial aggregation already collapses
 the hot key to ≤ 1 partial row per partition — for sum-mergeable

@@ -2,7 +2,8 @@
 (tools/bench_compare.py) — the judge and every round's perf adjudication
 run it, so its gating logic is pinned here: drift-band suppression,
 known-noisy-band exclusion, git min-recovery, and per-regime basket
-adjustment.
+adjustment. Also the shared query runner (``bench.run_query``) and the
+status-tracker counts of ``tools/probe.py``.
 
 Pure-function tests import the module directly; end-to-end gate tests
 shell out exactly as a round does.
@@ -21,9 +22,9 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _mod():
+def _mod(name: str = "bench_compare"):
     spec = importlib.util.spec_from_file_location(
-        "bench_compare", os.path.join(ROOT, "tools", "bench_compare.py")
+        name, os.path.join(ROOT, "tools", f"{name}.py")
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
@@ -317,3 +318,44 @@ def test_driverloop_excused_above_cross_regime_ceiling_calls_out(tmp_path):
                 calib=0.2, basket=basket_old)
     r2 = _run(old, new2, tmp_path)
     assert "CROSS-REGIME CEILING" not in r2.stdout
+
+
+def test_run_query_tags_every_job_then_clears_group_and_cache(spark):
+    """Every job the runner launches carries the query's job group (none
+    escapes ungrouped), and it leaves neither the group set nor any
+    operator-internal persist behind."""
+    import __spark_entry__ as em
+    from bench import run_query
+    from flink_streaming_2_10_spark.pipeline.caching import release_cached
+    from tests.conftest import SF_SMALL
+
+    name = "keyword_search"  # registers one tracked persist
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    grouped_before = set(st.getJobIdsForGroup(name))
+    ungrouped_before = set(st.getJobIdsForGroup(None))
+    assert run_query(spark, name, em.queries()[name], SF_SMALL) > 0
+    assert set(st.getJobIdsForGroup(name)) - grouped_before
+    assert set(st.getJobIdsForGroup(None)) <= ungrouped_before
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    assert release_cached() == 0
+
+
+def test_probe_counts_equal_status_tracker_walk(spark, capsys):
+    import __spark_entry__ as em
+    from tests.conftest import SF_SMALL
+
+    group = "probe-counts-test"
+    _mod("probe").counts(
+        spark, {group: em.queries()["tpch_q3_shipping_priority"]}, SF_SMALL
+    )
+    printed = json.loads(capsys.readouterr().out)
+
+    st = spark.sparkContext.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    infos = {s: st.getStageInfo(s) for j in jobs for s in st.getJobInfo(j).stageIds}
+    ran = [i.numTasks for i in infos.values() if i is not None and i.numTasks > 0]
+    assert printed == {
+        "query": group, "jobs": len(jobs), "stages": len(ran), "tasks": sum(ran),
+    }
+    assert printed["jobs"] > 0 and printed["tasks"] >= printed["stages"] > 0

@@ -114,21 +114,27 @@ def test_sentinel_flag_outranks_ripple_changed_but_not_never_verified(
     own operator source was edited. A force-flagged key (the
     --mark-changed sentinel) must therefore outrank ripple-flagged keys
     regardless of staleness — while never-verified keys still lead."""
-    base = dict.fromkeys(["a", "b", "c", "d"], object())
-    # a: ripple-changed, stalest evidence (r1). b: sentinel, FRESHEST
-    # evidence (r3). c: never verified. d: ripple-changed, r2.
-    _write_evidence(tmp_path, {1: ["a"], 2: ["d"], 3: ["b"]})
+    base = dict(list(em._base_queries().items())[:5])
+    a, b, c, d, e = base
+    # a: ripple-changed, evidence r2. b: sentinel, FRESHEST evidence (r4).
+    # c: never verified. d: ripple-changed, r3. e: unchanged (stored ==
+    # current fingerprint) with the STALEST evidence (r1), so only a
+    # working changed tier puts a and d ahead of it.
+    _write_evidence(tmp_path, {1: [e], 2: [a], 3: [d], 4: [b]})
+    fp_e = em._query_fingerprint(e)
+    assert None not in (em._query_fingerprint(a), em._query_fingerprint(d), fp_e)
     (tmp_path / "QUERY_FINGERPRINTS.json").write_text(
         json.dumps(
             {
-                "a": "<ripple-drift>",
-                "b": em._CHANGED_SENTINEL,
-                "d": "<ripple-drift>",
+                a: "<ripple-drift>",
+                b: em._CHANGED_SENTINEL,
+                d: "<ripple-drift>",
+                e: fp_e,
             }
         )
     )
     got = list(em._staleness_rotated(base, evidence_dir=str(tmp_path)))
-    assert got == ["c", "b", "a", "d"]
+    assert got == [c, b, a, d, e]
 
 
 def test_closure_includes_function_body_imports_and_is_deterministic():

@@ -11,6 +11,7 @@ import os
 
 from flink_streaming_2_10_spark.streaming.runners import (
     run_update_stream,
+    sessionize_stream,
     streaming_exact_dedup,
     window_join_stream,
 )
@@ -115,3 +116,40 @@ def test_exact_dedup_restart_equals_uninterrupted_and_batch(spark, tmp_path):
     batch = sorted(map(key, build(tmp_path / "full", streaming=False).collect()))
     assert first == [1, 2]
     assert restarted == full == batch == [1, 2, 4]
+
+
+def test_sessionize_restart_equals_uninterrupted_and_batch(spark, tmp_path):
+    from flink_streaming_2_10_spark.operators.temporal import sessionize
+
+    def ev(eid, k, t):
+        return {"event_id": eid, "k": k, "t": t}
+
+    # gap 10. After batch 0, a is in its 2nd session (last t 20) and b in
+    # its 1st (last t 3): a's t=30 (delta exactly 10) stays in session 2
+    # and b's t=14 (delta 11) opens session 2 — both only if (last_t,
+    # idx) survived the restart; lost state would label each session 1.
+    files = {"events": [
+        [ev(1, "a", 0), ev(2, "b", 3), ev(3, "a", 20)],
+        [ev(4, "a", 30), ev(5, "b", 14), ev(6, "c", 1)],
+    ]}
+
+    def build(root, streaming=True):
+        reader = (spark.readStream.option("maxFilesPerTrigger", 1)
+                  if streaming else spark.read)
+        events = reader.schema("event_id LONG, k STRING, t LONG").json(
+            str(root / "events")
+        )
+        op = sessionize_stream if streaming else sessionize
+        return op(events, on=["k"], time_col="t", gap=10)
+
+    def key(r):
+        return r["event_id"], r["session_idx"]
+
+    first, restarted, full = _interrupted_and_uninterrupted(
+        tmp_path, files, build, key
+    )
+    batch = sorted(map(key, build(tmp_path / "full", streaming=False).collect()))
+    assert first == [(1, 1), (2, 1), (3, 2)]
+    assert restarted == full == batch == [
+        (1, 1), (2, 1), (3, 2), (4, 2), (5, 2), (6, 1)
+    ]

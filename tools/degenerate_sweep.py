@@ -54,10 +54,12 @@ import tempfile
 import traceback
 
 import duckdb
-import pandas as pd
 import pyarrow.parquet as pq
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [os.path.dirname(TOOLS), TOOLS]  # the checkout, and selfcheck
+
+from selfcheck import compare  # noqa: E402
 
 SF_BASE = os.environ.get("DEGEN_SF_BASE", "/root/testdata/sf0.001")
 TABLES = (
@@ -130,29 +132,6 @@ def build_hotkey_variant(base: str, out_dir: str, null_keys: bool = False) -> No
                 t.schema.get_field_index(col), t.schema.field(col), new
             )
         pq.write_table(t, f"{out_dir}/{name}.parquet", version="2.6")
-
-
-def norm(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    if len(df):
-        df = df.sort_values(list(df.columns), kind="mergesort")
-    return df.reset_index(drop=True)
-
-
-def compare(a: pd.DataFrame, b: pd.DataFrame) -> str | None:
-    """Return a divergence description, or None if equal (driver semantics:
-    order-insensitive, name-matched columns, exact values)."""
-    if sorted(a.columns) != sorted(b.columns):
-        return f"schema: spark={sorted(a.columns)} oracle={sorted(b.columns)}"
-    if len(a) != len(b):
-        return f"rows: spark={len(a)} oracle={len(b)}"
-    try:
-        pd.testing.assert_frame_equal(
-            norm(a), norm(b), check_dtype=False, check_exact=True
-        )
-    except AssertionError as e:
-        return f"values: {str(e).splitlines()[-1][:300]}"
-    return None
 
 
 def resolve_out(only: str | None, variant: str | None, out: str | None) -> tuple[str, bool]:

@@ -1,9 +1,8 @@
 """Self-check: replicate the driver's correctness gate locally.
 
 Runs every ``queries()`` entry at a given SF and compares against
-``oracle_sql()`` via DuckDB: row count, column names, and an
-order-insensitive exact value comparison (floats compared bit-exact, since
-the driver hashes values).
+``oracle_sql()`` via DuckDB with :func:`compare`, the one oracle
+comparison the tools share (``tools/degenerate_sweep.py`` uses it too).
 
 Usage: python tools/selfcheck.py [sf_dir] [query ...]
 """
@@ -22,6 +21,24 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)].copy()
     df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
     return df
+
+
+def compare(a: pd.DataFrame, b: pd.DataFrame) -> str | None:
+    """Why Spark's ``a`` differs from the oracle's ``b``, or None if they
+    match as the correctness gate sees it: same column names and row
+    count, then exact values, order-insensitive (floats bit-exact, since
+    the gate hashes values)."""
+    if sorted(a.columns) != sorted(b.columns):
+        return f"schema: spark={sorted(a.columns)} oracle={sorted(b.columns)}"
+    if len(a) != len(b):
+        return f"rows: spark={len(a)} oracle={len(b)}"
+    try:
+        pd.testing.assert_frame_equal(
+            normalize(a), normalize(b), check_dtype=False, check_exact=True
+        )
+    except AssertionError as exc:
+        return f"values: {str(exc).splitlines()[-1][:300]}"
+    return None
 
 
 def main() -> int:
@@ -67,24 +84,10 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL {name}: duckdb error: {exc}")
             continue
-        problems = []
-        if len(spark_pdf) != len(duck_pdf):
-            problems.append(f"rows {len(spark_pdf)} vs {len(duck_pdf)}")
-        if sorted(spark_pdf.columns) != sorted(duck_pdf.columns):
-            problems.append(
-                f"cols {sorted(spark_pdf.columns)} vs {sorted(duck_pdf.columns)}"
-            )
-        if not problems:
-            a, b = normalize(spark_pdf), normalize(duck_pdf)
-            try:
-                pd.testing.assert_frame_equal(
-                    a, b, check_dtype=False, check_exact=True
-                )
-            except AssertionError as exc:
-                problems.append(f"values differ: {str(exc)[:500]}")
-        if problems:
+        problem = compare(spark_pdf, duck_pdf)
+        if problem:
             failures.append(name)
-            print(f"FAIL {name}: {'; '.join(problems)}")
+            print(f"FAIL {name}: {problem}")
         else:
             print(f"ok   {name}: {len(spark_pdf)} rows match ({took:.1f}s)")
 
